@@ -42,7 +42,15 @@ def pin(col: Column) -> Column:
         F.col) — embedding the pinned tree into every consumer copies a
         nondeterministic tree per site, which also defeats runtime
         subexpression elimination.
-    `element_at(array(col), int(rand()*0)+1)` survives optimization,
+    `element_at(array(col), int(rand(0)*0)+1)` survives optimization,
     codegens, and always evaluates to `col` (index is always 1).
+
+    The seed is FIXED: `rand()` draws a fresh seed per call, and the seed
+    is a literal in the generated Java. Spark's codegen cache is keyed on
+    that source, so an unseeded pin made every rebuilt plan a cache miss
+    — Janino recompiled the whole stage on every pass of a re-built
+    pipeline (4 classes per flagship pass). A fixed seed keeps `Rand`
+    nondeterministic, so the optimizer still refuses to inline, while
+    the generated code is identical across builds and hits the cache.
     """
-    return F.element_at(F.array(col), (F.rand() * 0).cast("int") + 1)
+    return F.element_at(F.array(col), (F.rand(0) * 0).cast("int") + 1)

@@ -671,7 +671,11 @@ def grok_parse(
     Documented truncation semantics: captures come from the prefix only;
     a match completing beyond the cap is a parse failure.
     """
-    from ilogtail_spark.operators.parse import regex_parse
+    from ilogtail_spark.operators.parse import (
+        _apply_keep_source,
+        _literal_guard,
+        regex_parse,
+    )
 
     if isinstance(matches, str):
         matches = [matches]
@@ -700,7 +704,11 @@ def grok_parse(
     df = df.withColumn("__grok_done__", F.lit(False))
     for ci, cg in enumerate(compiled):
         pat = "(?s)" + cg.regex
-        m = (~F.col("__grok_done__")) & src.rlike(pat)
+        m = ~F.col("__grok_done__")
+        lit = _literal_guard(src, pat)
+        if lit is not None:
+            m = m & lit
+        m = m & src.rlike(pat)
         cols = {}
         # duplicate aliases across alternation branches (e.g.
         # HTTPD_ERRORLOG's timestamp): first NON-EMPTY capture wins —
@@ -722,7 +730,5 @@ def grok_parse(
         cols["__grok_done__"] = F.col("__grok_done__") | m
         df = df.withColumns(cols)
     matched = F.col("__grok_done__")
-    from ilogtail_spark.operators.parse import _apply_keep_source
-
     df = _apply_keep_source(df, source_key, matched, keep_source, keep_source_if_parse_error)
     return df.drop("__grok_done__")

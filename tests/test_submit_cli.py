@@ -14,15 +14,18 @@ import sys
 import zipfile
 
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _zip_package(dst: str) -> str:
-    pkg_root = "/root/repo/ilogtail_spark"
+    pkg_root = os.path.join(REPO_ROOT, "ilogtail_spark")
     zpath = os.path.join(dst, "ilogtail_spark.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for root, _dirs, files in os.walk(pkg_root):
             for f in files:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, "/root/repo"))
+                    z.write(full, os.path.relpath(full, REPO_ROOT))
     return zpath
 
 
